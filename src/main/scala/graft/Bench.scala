@@ -1,4 +1,6 @@
 package graft
+import graft.util.{GraftSession, QueryProfile}
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -60,31 +62,7 @@ object Bench {
     // driver's exact session config — the isolated-re-measure path that
     // previously required env-var gymnastics. No args = full inventory.
     val argFilter = positional.headOption.filter(_.nonEmpty).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions default to the thread count (the driver's
-    // contract config) but are overridable for scale-proof sweeps:
-    // per-task memory is heap/concurrency ÷ rows-per-partition, so a
-    // 100× fixture on the same heap needs proportionally more, smaller
-    // partitions to keep sorts and partial aggregates in memory (AQE
-    // coalesces the small ones back, so over-partitioning is cheap).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Pinned in code, not just build.sbt's forked-JVM -D flag: the
-      // NTZ→TIMESTAMP fixture normalization is session-TZ-dependent, so
-      // a spark-submit launch on a non-UTC host must not shift instants.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RocksDB state store for the streaming family (see Verify.scala
-      // for the rationale — disk-backed state, bounded executor heap)
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     // untimed warmup: session/codegen/parquet-reader init otherwise lands
     // on whichever query happens to run first (map iteration order — i.e.
     // an arbitrary query absorbs JIT, janino, broadcast-pool, and footer
@@ -102,27 +80,12 @@ object Bench {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 1).count()
     } catch { case _: Throwable => }
-    // optional comma-separated name filter (local iteration only; the
-    // driver never sets it and times the full inventory)
-    val only = argFilter.orElse(
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet))
-    // shuffle/spill accounting: a task listener accumulates bytes,
-    // snapshotted around each query. ALWAYS ON (r14 — the rounds' best
-    // scale findings all came from bytes evidence, and an opt-in line kept
-    // dropping out of recorded sweeps): the bytes line prints BEFORE the
+    // shuffle/spill accounting: the task listener's cumulative totals,
+    // snapshotted around each query. The bytes line prints BEFORE the
     // compact summary, so the driver's bounded-tail capture still ends on
-    // the untouched contract line. Listener delivery is asynchronous, so
-    // per-query deltas can bleed a late task into the next query — fine
-    // for a scaling record, wrong for sub-second adjudication; use
-    // isolated triples for those. SPARK_GRAFT_BENCH_METRICS=0 is the
-    // kill switch.
-    val metrics = if (sys.env.get("SPARK_GRAFT_BENCH_METRICS").contains("0")) {
-      None
-    } else {
-      val l = new MetricsListener
-      spark.sparkContext.addSparkListener(l)
-      Some(l)
-    }
+    // the untouched contract line. The bus is drained before each
+    // snapshot, so a query's deltas are complete by construction.
+    val profile = QueryProfile.attach(spark)
     val perQueryMetrics = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // per-run walls under --repeat — the band behind each median, kept in
     // the full record so a median record discloses its spread (r15)
@@ -135,19 +98,14 @@ object Bench {
     def timeOnce(
         name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame
-    ): (Double, Option[String]) = {
-      // isolate per-query timing: drop caches left by previous queries AND
-      // their localCheckpoint result blocks — clearCache() does not touch
-      // checkpoint RDD blocks, and leaving their release to the
-      // ContextCleaner (GC timing) let block churn bleed multi-second
-      // noise into unrelated queries (recorded round-2 outliers). Blocking
-      // unpersist so the next timing starts from a clean block manager.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // drain the async listener bus so the per-query byte deltas are
-      // complete by construction (same rationale as StageProbe's drain)
-      metrics.foreach(_ => org.apache.spark.graft.ListenerBus.drain(spark.sparkContext))
-      val before = metrics.map(_.snapshot())
+    ): (Double, String) = {
+      // isolate per-query timing: drop caches and checkpoint blocks left
+      // by previous queries (their lazy release bled multi-second noise
+      // into unrelated queries — recorded round-2 outliers)
+      GraftSession.resetCaches(spark)
+      ListenerBus.drain(spark.sparkContext)
+      profile.clear() // only the totals are read here
+      val before = profile.totals
       val t0 = System.nanoTime()
       // 1.0 = ok; -1.0 = failed; -2.0 = the query's own O(n²)-validator
       // guard declined the corpus (labeled validators refuse to run past
@@ -170,23 +128,21 @@ object Bench {
       // capture the end time BEFORE the metrics drain, so the bus wait
       // never inflates the timed number
       val t1 = System.nanoTime()
-      val bytesJson = metrics.map { l =>
-        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-        val b = before.get
-        val a = l.snapshot()
-        s"""{"shuffle_read":${a._1 - b._1},"shuffle_write":${a._2 - b._2},""" +
-          s""""mem_spill":${a._3 - b._3},"disk_spill":${a._4 - b._4}}"""
-      }
+      ListenerBus.drain(spark.sparkContext)
+      val d = profile.totals - before
+      val bytesJson =
+        s"""{"shuffle_read":${d.shuffleRead},"shuffle_write":${d.shuffleWrite},""" +
+          s""""mem_spill":${d.memSpill},"disk_spill":${d.diskSpill}}"""
       // failed queries record -1 (guard-skips -2) so the JSON can't
       // masquerade as a fast pass
       (if (outcome > 0) (t1 - t0) / 1e9 else outcome, bytesJson)
     }
 
     val results = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => argFilter.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val runBytes = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
+      val runBytes = scala.collection.mutable.ArrayBuffer.empty[String]
       var marker = 0.0 // -1/-2 if any run fails/guard-skips
       var i = 1
       // a failed/guard-skipped run ends the repeats — repeating a
@@ -203,7 +159,7 @@ object Bench {
           // the shuffle/spill counters of exactly the run one wants to
           // debug (the wall stays the -1/-2 marker, so the pairing rule
           // "published wall and bytes come from one execution" holds)
-          bytes.foreach(perQueryMetrics(name) = _)
+          perQueryMetrics(name) = bytes
         }
         i += 1
       }
@@ -216,7 +172,7 @@ object Bench {
       val sec =
         if (marker != 0.0) marker
         else runs(medianIdx)
-      if (medianIdx >= 0) runBytes(medianIdx).foreach(perQueryMetrics(name) = _)
+      if (medianIdx >= 0) perQueryMetrics(name) = runBytes(medianIdx)
       if (repeat > 1) perQueryRuns(name) = runs.toSeq
       // one short line per query, printed as it finishes: live progress
       // locally, and the only per-query record that survives a
@@ -227,11 +183,9 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    metrics.foreach { _ =>
-      val ms = perQueryMetrics.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"bytes","queries":$ms,"sf":"$sfDir"}""")
-    }
+    val ms = perQueryMetrics.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    println(s"""{"metric":"bytes","queries":$ms,"sf":"$sfDir"}""")
     // Complete per-query record → file (the full map is ~8 KB for the
     // 165-query inventory — larger than any bounded tail capture).
     // Overridable for local sweeps; failures keep their -1/-2 markers.
@@ -275,16 +229,12 @@ object Bench {
         s""""guard_skipped":${arr(skipped)},"queries_truncated_to":"slowest20",""" +
         s""""repeat":$repeat,"full_record":"$outPath"}"""
     println(recordLine)
-    // r20 harness defect: the streaming state-store maintenance pool
-    // races spark.stop() and dumps an RpcEnvStoppedException stack trace
-    // AFTER the record line, scrolling it out of the driver's bounded
-    // tail capture (BENCH_r20.json parsed null). Quiesce the maintenance
-    // pool BEFORE the session stops so the race cannot fire, then stop,
-    // then re-emit the record line so it is the process's LAST stdout
-    // output no matter what shutdown logging interleaves.
-    try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    catch { case _: Throwable => }
-    spark.stop()
+    // r20 harness defect: shutdown logging after the record line scrolled
+    // it out of a bounded tail capture of stdout (BENCH_r20.json parsed
+    // null). Stop the session (maintenance pool first), then re-emit the
+    // record line so it is the process's LAST stdout output no matter
+    // what shutdown logging interleaves.
+    GraftSession.stop(spark)
     println(recordLine)
   }
 
@@ -304,26 +254,5 @@ object Bench {
       depth += 1
     }
     false
-  }
-
-  /** Cumulative task-level shuffle/spill bytes (see the opt-in note at the
-    * registration site).
-    */
-  private final class MetricsListener extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    private val sr = new AtomicLong
-    private val sw = new AtomicLong
-    private val ms = new AtomicLong
-    private val ds = new AtomicLong
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        ms.addAndGet(m.memoryBytesSpilled)
-        ds.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot(): (Long, Long, Long, Long) = (sr.get, sw.get, ms.get, ds.get)
   }
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,25 +10,7 @@ object Verify {
     // only — the driver always runs the full set)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RocksDB state store: the default HDFS-backed provider keeps ALL
-      // keyed streaming state (sessions, dedup keys, interval-join
-      // buffers) on the executor heap — the one memory-bound-at-100×
-      // component. RocksDB spills state to local disk with a bounded
-      // block cache, and changelog checkpointing uploads per-batch deltas
-      // instead of full snapshots. State values are byte-identical either
-      // way (same encoders), so oracles are unaffected.
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave a visible record, not a silent
     // absence: an omitted dump shrinks the driver's CORRECTNESS json and
@@ -68,6 +50,6 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} quer${if (errors.size == 1) "y" else "ies"} FAILED: ${errors.keys.mkString(", ")}")
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -849,25 +849,28 @@ object EventStream {
       "spark.sql.session.timeZone",
       "spark.sql.legacy.parquet.nanosAsLong"
     ).foreach(k => spark.conf.getOption(k).foreach(ss.conf.set(k, _)))
-    // Engine defaults for the drains this module owns (r22, StreamProbe
-    // decomposition: per-(store, batch) RocksDB lifecycle — open, put,
-    // commit, changelog — is the dominant micro-batch cost, not the data):
+    // Engine defaults for the drains this module owns (r22 streaming
+    // probe decomposition: per-(store, batch) RocksDB lifecycle — open,
+    // put, commit, changelog — is the dominant micro-batch cost, not the
+    // data):
     //  - join stateFormatVersion 3 collapses the stream-stream join's FOUR
     //    stores per partition into ONE RocksDB store with virtual column
-    //    families (4.x, RocksDB-only) — 4× fewer store commits per
-    //    micro-batch with an identical join result; the format is pinned
-    //    per checkpoint at first start, and every drain here starts a
-    //    fresh checkpoint.
+    //    families — 4× fewer store commits per micro-batch with an
+    //    identical join result; the format is pinned per checkpoint at
+    //    first start, and every drain here starts a fresh checkpoint.
+    //    Version 3 needs RocksDB, so it is set only when that is the
+    //    effective provider; a caller session on any other provider keeps
+    //    Spark's default format.
     //  - trackTotalNumberOfRows=false drops the get-before-every-put the
     //    provider otherwise pays just to maintain the numRowsTotal METRIC
     //    (the documented production trade for write-heavy state).
-    // Set unconditionally: the scoped session exists for exactly one
-    // engine-owned drain against a fresh checkpoint (a conf.getOption
-    // probe cannot distinguish a caller's explicit choice from the
-    // registered default, and no restart against a foreign checkpoint
-    // happens through this path — the format version a checkpoint pins
-    // is this one's).
-    ss.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
+    // The scoped session exists for exactly one engine-owned drain against
+    // a fresh checkpoint, so no restart against a foreign checkpoint
+    // happens through this path — the format version a checkpoint pins is
+    // this one's.
+    if (ss.conf.get("spark.sql.streaming.stateStore.providerClass") ==
+        graft.util.GraftSession.RocksDbProvider)
+      ss.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
     ss.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
     ss.conf.set("spark.sql.shuffle.partitions", stateParallelism(ss, srcPath).toString)
     ss

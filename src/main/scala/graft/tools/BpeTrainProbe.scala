@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 
 /** Per-iteration cost attribution for the incremental BPE trainer — the
   * evidence that per-merge work tracks the VOCAB-TOUCH FRACTION (the
@@ -21,16 +21,7 @@ object BpeTrainProbe {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: BpeTrainProbe <sfDir> <numMerges>")
     val (dir, m) = (args(0), args(1).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
 
     val docs = graft.queries.Tables.t(spark, dir, "documents").select("text")
     val iters = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
@@ -56,6 +47,6 @@ object BpeTrainProbe {
         s""""wall_ms_last_quartile_mean":${mean(iters.takeRight(q).map(_._3).toSeq)},""" +
         s""""count_first_quartile_mean":${mean(iters.take(q).map(_._2).toSeq)},""" +
         s""""count_last_quartile_mean":${mean(iters.takeRight(q).map(_._2).toSeq)}}""")
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Caching, Similarity}
+import graft.util.GraftSession
 
 /** SRP recall measurement at arbitrary corpus scale (VERDICT r7 "Next
   * round" #1): the auto-scaled plane count in `srpVerifiedPlan`
@@ -210,26 +211,21 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: RecallProbe <sfDir> [skipFull | pqSweep [k1,k2,... (-1 = adaptive)] | phashBands | audioBands]")
+    val spark = GraftSession.create()
+    try probe(spark, args) finally GraftSession.stop(spark)
+  }
+
+  private def probe(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir = args(0)
     val skipFull = args.length > 1 && args(1) == "skipFull"
     // `pqSweep` arg: measure PQ recall@5 across rerankK values instead of
     // the standard probe set (`runMain graft.tools.RecallProbe /tmp/sf10
     // pqSweep 200,400,800,1600`)
     val pqSweep = args.length > 1 && args(1) == "pqSweep"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     // `phashBands` arg: the mm_phash_dedup banding tail-recall probe
     // (data-free — planted hashes, not the embeddings table)
     if (args.length > 1 && args(1) == "phashBands") {
       phashBandRecall(spark)
-      spark.stop()
       return
     }
 
@@ -238,7 +234,6 @@ object RecallProbe {
     // candidate column
     if (args.length > 1 && args(1) == "audioBands") {
       phashBandRecall(spark, fpCol = "afp")
-      spark.stop()
       return
     }
 
@@ -277,7 +272,6 @@ object RecallProbe {
       }
       Caching.release(exact)
       base.unpersist(false)
-      spark.stop()
       return
     }
 
@@ -295,7 +289,6 @@ object RecallProbe {
             s""""adaptive":${k < 0},"n_hits":$hits,"n_exact":$nExact,"recall":$recall}""")
       }
       base.unpersist(false)
-      spark.stop()
       return
     }
 
@@ -345,6 +338,5 @@ object RecallProbe {
       Caching.release(exact); Caching.release(got)
       base.unpersist(false)
     }
-    spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up fixture generator: replicate an existing sf directory by an
@@ -52,19 +53,10 @@ object ScaleGen {
     val src = args(0)
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // In-code UTC pin: the NTZ fixture branch casts naive timestamps
-      // under the session TZ; a non-UTC launch outside sbt would bake
-      // shifted instants into the generated fixture.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scalegen")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the factory pins UTC: the NTZ fixture branch casts naive timestamps
+    // under the session TZ, so any other zone would bake shifted instants
+    // into the generated fixture
+    val spark = GraftSession.create()
 
     def read(name: String): DataFrame = graft.queries.Tables.t(spark, src, name)
 
@@ -90,7 +82,7 @@ object ScaleGen {
     }
     def copies(df: DataFrame): DataFrame =
       df.crossJoin(spark.range(factor).toDF("__k"))
-    // Scaled tables are written as `cpus` files so the fixture is
+    // Scaled tables are written as one file per core so the fixture is
     // ROW-GROUP-SPLITTABLE. The source fixture is one small file → one
     // scan partition, and the crossJoin replication inherits it, so an
     // unspread write produced ONE file with ONE row group per table —
@@ -101,7 +93,7 @@ object ScaleGen {
     // as many files; single-row-group gigafiles were a generator
     // artifact, not a property of the workload.
     def write(df: DataFrame, name: String, spread: Boolean = true): Unit = {
-      val out = if (spread) df.repartition(cpus.toInt) else df
+      val out = if (spread) df.repartition(spark.sparkContext.defaultParallelism) else df
       out.write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[scalegen] wrote $name")
     }
@@ -191,6 +183,6 @@ object ScaleGen {
       println(s"[scalegen] no embeddings.parquet in $src - skipped")
     }
 
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -12,26 +12,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
+  val Cpus = 4
+
+  /** The mains' contract session (`GraftSession`) at [[Cpus]] threads. */
+  lazy val session: SparkSession =
+    graft.util.GraftSession.builder(Cpus)
       .appName("graft-test")
       // the production registration route (spark.sql.extensions=…);
       // imperative ensureRegistered calls become no-ops on this session,
       // and GraftExtensionsSpec proves the extension route alone resolves
       // the functions in a fresh child session
       .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the Verify/Bench runtime: RocksDB-backed streaming state
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      .config("spark.log.level", "ERROR")
       .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
 }

@@ -347,6 +347,24 @@ class StreamingSpec extends SparkSpec {
     assert(unmatchedBelow == leftNulls)
   }
 
+  test("interval joins on an HDFS-backed caller session equal the RocksDB results") {
+    // join state format 3 exists only for RocksDB; a caller session on
+    // the default provider must keep Spark's format and the same result
+    val src = sf("sf0.001") + "/events.parquet"
+    val lookback = 6 * 3600 * 1000L
+    val hdfs = spark.newSession()
+    hdfs.conf.set(
+      "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
+    for (run <- Seq(EventStream.intervalJoinRunOnce _, EventStream.intervalJoinLeftRunOnce _)) {
+      val onHdfs = pairs(run(hdfs, src, lookback, "0 seconds"))
+      assert(onHdfs.nonEmpty)
+      assert(onHdfs == pairs(run(spark, src, lookback, "0 seconds")))
+    }
+  }
+
   test("drain runs on a scoped session: shared conf unchanged under a concurrent batch job") {
     // A drain sizes streaming state to actual parallelism. Pre-r14 that
     // was a set-and-restore of spark.sql.shuffle.partitions on the SHARED

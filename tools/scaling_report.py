@@ -5,8 +5,8 @@ against the data-size factor. Usage:
 
     python3 tools/scaling_report.py base.json scaled.json [factor]
 
-Each input file holds the one or two JSON lines Bench prints (the "total"
-line, and with SPARK_GRAFT_BENCH_METRICS=1 the "bytes" line)."""
+Each input file holds the two JSON lines Bench prints (the "total" line and
+the "bytes" line); a file with only the "total" line reports times alone."""
 import json
 import sys
 

@@ -66,7 +66,6 @@ def bench(scale, label, repeat=1):
         "SPARK_GRAFT_SHUFFLE_PARTITIONS": partitions,
         "SPARK_DRIVER_MEM": heap,
         "SPARK_GRAFT_BENCH_OUT": str(out),
-        "SPARK_GRAFT_BENCH_METRICS": "1",
     }
     t0 = time.time()
     main_cmd = "runMain graft.Bench" + (f" --repeat {repeat}" if repeat > 1 else "")
@@ -240,7 +239,7 @@ def main():
         f.write("## Isolated triple-runs (fill in for any apparent outlier)\n\n")
         f.write("  for i in 1 2 3; do SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR="
                 f"{BASE_SF} sbt -batch 'runMain graft.Bench <query>'; done\n\n")
-        f.write("## PlanAudit (explain the slowest new/changed queries)\n\n")
+        f.write("## Probe plan (explain the slowest new/changed queries)\n\n")
     print(f"[sweep] notes skeleton -> {notes}", flush=True)
 
 
